@@ -29,25 +29,15 @@ def apply_data_quality_fixes(
     """Add the two 0/1 flags and the clipped score.
 
     ``clipped_col=None`` overwrites ``value_col`` in place like the
-    reference; pass a name to keep the raw value alongside.
+    reference; pass a name to keep the raw value alongside.  One
+    projection: every expression reads the input ``value_col``.
     """
     v = F.col(value_col)
-    out = df.withColumn(
-        "negatif_clv_flag", F.when(v < 0, F.lit(1)).otherwise(F.lit(0))
-    ).withColumn(
-        "outliners_flag",
-        F.when(v > outlier_threshold, F.lit(1)).otherwise(F.lit(0)),
-    )
-    target = clipped_col or value_col
-    return out.withColumn(target, F.greatest(v, F.lit(0.0)))
+    return df.withColumns({
+        "negatif_clv_flag": F.when(v < 0, F.lit(1)).otherwise(F.lit(0)),
+        "outliners_flag": F.when(v > outlier_threshold, F.lit(1)).otherwise(
+            F.lit(0)
+        ),
+        clipped_col or value_col: F.greatest(v, F.lit(0.0)),
+    })
 
-
-def flag_counts(df: DataFrame) -> tuple[int, int]:
-    """SUM of the 0/1 flags for the log lines (reference
-    dags/clv_models.py:27,33).  One tiny 2-column aggregate.
-    """
-    row = df.agg(
-        F.sum("negatif_clv_flag").alias("n"),
-        F.sum("outliners_flag").alias("o"),
-    ).first()
-    return int(row["n"] or 0), int(row["o"] or 0)

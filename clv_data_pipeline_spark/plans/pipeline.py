@@ -6,10 +6,21 @@ Reference chain (dags/clv_data_dag.py:115):
     predict_clv_scores
 
 Airflow task boundaries (separate processes + GCS/BQ round trips)
-dissolve into DataFrame lineage.  The only true barriers remain:
-(a) the validation gate — its aggregates must materialize before the
-pass/fail decision; (b) the model-fit collects.  Everything else is one
-lazily-planned job per sink.
+dissolve into DataFrame lineage.  A warm day (tables already on disk,
+adaptive execution on, so each shuffle stage is its own job) runs 13
+Spark jobs (per action, in parentheses):
+
+1. registry max: top-1 over the registry, read with its known schema (1)
+2. staging write and registry write (1 + 1)
+3. feature write, with the firewall's feature-side counts observed (3)
+4. raw aggregate over staging: rows and distinct customers (3)
+5. feature schema read: inferred, so the firewall sees the file (1)
+6. fit collect: both models' sufficient statistics in one collect (2)
+7. prediction write, with its row count observed (1)
+
+Staging is read back with the schema it was written with, so it needs
+no inference job, and every ``PipelineResult`` count comes from one of
+these actions.
 
 Scale notes: staging is partitioned by ``load_date`` so the (full
 refresh) feature build reads only what it needs if later made
@@ -23,10 +34,14 @@ import datetime as dt
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
-from clv_data_pipeline_spark.operators.clv import run_clv_logic
+from clv_data_pipeline_spark.operators.clv import (
+    predictions_projection,
+    run_clv_logic,
+)
 from clv_data_pipeline_spark.operators.features import (
     normalize_for_model,
     rfm_features,
@@ -36,6 +51,9 @@ from clv_data_pipeline_spark.operators.validate import (
     run_validation_checks,
 )
 from clv_data_pipeline_spark.simulate import simulate_daily_batch
+
+
+_REGISTRY_SCHEMA = "CustomerID LONG, load_date DATE"
 
 
 @dataclass
@@ -54,17 +72,21 @@ def _registry_max_id(spark: SparkSession, path: str, before_date: str) -> int:
     branch).  Excluding the current day makes a day's rerun read the
     same max, allocate the same IDs, and therefore regenerate the same
     batch — idempotency the reference's unconditional streaming insert
-    lacks."""
+    lacks.  Any other read failure raises: a registry that exists but
+    cannot be read must not restart the IDs at 1."""
     try:
-        df = spark.read.parquet(path)
-    except Exception:
-        return 0
+        reg = spark.read.schema(_REGISTRY_SCHEMA).parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() == "PATH_NOT_FOUND":
+            return 0
+        raise
     row = (
-        df.filter(F.col("load_date") < F.lit(before_date).cast("date"))
-        .agg(F.coalesce(F.max("CustomerID"), F.lit(0).cast("long")).alias("m"))
+        reg.filter(F.col("load_date") < F.lit(before_date).cast("date"))
+        .select("CustomerID")
+        .orderBy(F.desc("CustomerID"))
         .first()
     )
-    return int(row["m"])
+    return int(row["CustomerID"]) if row else 0
 
 
 def run_pipeline(
@@ -83,10 +105,11 @@ def run_pipeline(
             simulate_data.py:74-95 streaming insert).
     Task 1+2: generate one 24 h batch, land it in the staging partition
             for ``run_date``.  ``idempotent_reruns`` uses dynamic
-            partition overwrite so re-running a day replaces its
-            partition instead of duplicating it — the reference's
-            WRITE_APPEND double-loads on retry; at scale, idempotent
-            daily jobs are the operational requirement.
+            partition overwrite (a write option; the session conf is
+            untouched) so re-running a day replaces its partition
+            instead of duplicating it — the reference's WRITE_APPEND
+            double-loads on retry; at scale, idempotent daily jobs are
+            the operational requirement.
     Task 3: full-refresh RFM-T features (CREATE OR REPLACE semantics).
     Task 4: firewall — raises ValueError on gate failure, aborting
             before scoring, exactly like the failed Airflow task.
@@ -97,6 +120,7 @@ def run_pipeline(
     predictions_path = os.path.join(base_dir, "predicted_clv")
     registry_path = os.path.join(base_dir, "master_users")
     run_date = str(run_date)
+    mode = "overwrite" if idempotent_reruns else "append"
 
     # Task 0 — ID registry (reference simulate_data.py:23-95)
     if max_existing_id is None:
@@ -112,12 +136,6 @@ def run_pipeline(
     batch = simulate_daily_batch(
         spark, max_existing_id, f"{window_start} 00:00:00", seed=seed
     ).withColumn("load_date", F.lit(run_date).cast("date"))
-    if idempotent_reruns:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        batch.write.mode("overwrite").partitionBy("load_date").parquet(staging)
-    else:
-        batch.write.mode("append").partitionBy("load_date").parquet(staging)
-
     # registry write for the newly-allocated IDs (S7), dated so a rerun
     # overwrites its own allocation instead of stacking a new one
     new_ids = (
@@ -130,57 +148,46 @@ def run_pipeline(
         .select(F.col("id").alias("CustomerID"))
         .withColumn("load_date", F.lit(run_date).cast("date"))
     )
-    if idempotent_reruns:
-        new_ids.write.mode("overwrite").partitionBy("load_date").parquet(
-            registry_path
-        )
-    else:
-        new_ids.write.mode("append").partitionBy("load_date").parquet(
-            registry_path
-        )
-
-    tx = spark.read.parquet(staging)
-    staging_rows = tx.count()
+    for df, path in ((batch, staging), (new_ids, registry_path)):
+        df.write.mode(mode).option("partitionOverwriteMode", "dynamic").partitionBy(
+            "load_date"
+        ).parquet(path)
 
     # Task 3 — full-refresh feature build (reference clv_data_dag.py:77-96).
     # The firewall's feature-side probes (row count == distinct customers,
     # since the build groups by customer; negative-value count) ride the
     # write via observe() — no second pass over the feature table.
-    features = rfm_features(tx, asof=run_date)
-    observed, obs = observed_features(features)
+    tx = spark.read.schema(batch.schema).parquet(staging)
+    observed, obs = observed_features(rfm_features(tx, asof=run_date))
     observed.write.mode("overwrite").parquet(features_path)
     metrics = obs.get
-    features = spark.read.parquet(features_path)
 
     # Task 4 — the firewall (reference clv_data_dag.py:99-103); raises on
-    # DATA LOSS / SCHEMA ERROR / SANITY ERROR.  Only the raw-side
-    # distinct-customer count still needs its own aggregate.
-    raw_c = int(
-        tx.agg(F.count_distinct("CustomerID").alias("c")).first()["c"]
-    )
+    # DATA LOSS / SCHEMA ERROR / SANITY ERROR.  The feature table is
+    # read back with inference so the SCHEMA check sees the file on disk.
+    raw = tx.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.count_distinct("CustomerID").alias("customers"),
+    ).first()
+    features = spark.read.parquet(features_path)
     run_validation_checks(
-        raw_c,
+        int(raw["customers"]),
         int(metrics["feature_count"]),
         int(metrics["invalid_count"]),
         features.columns,
     )
 
-    # Task 5 — scoring (reference clv_data_dag.py:106-110)
-    preds = run_clv_logic(normalize_for_model(features))
-    out = preds.select(
-        "customer_id",
-        "predicted_purchases",
-        "predicted_avg_value",
-        "clv",
-        "negatif_clv_flag",
-        "outliners_flag",
-    )
-    out.write.mode("overwrite").parquet(predictions_path)
+    # Task 5 — scoring (reference clv_data_dag.py:106-110); the write
+    # observes its own row count.
+    preds_obs = Observation("predictions")
+    predictions_projection(run_clv_logic(normalize_for_model(features))).observe(
+        preds_obs, F.count(F.lit(1)).alias("rows")
+    ).write.mode("overwrite").parquet(predictions_path)
 
     return PipelineResult(
-        staging_rows=staging_rows,
-        feature_rows=features.count(),
-        prediction_rows=spark.read.parquet(predictions_path).count(),
+        staging_rows=int(raw["rows"]),
+        feature_rows=int(metrics["feature_count"]),
+        prediction_rows=int(preds_obs.get["rows"]),
         features_path=features_path,
         predictions_path=predictions_path,
     )

@@ -72,11 +72,16 @@ def test_negative_clv_clipping_authentic(spark):
 
 
 def test_empty_df_as_input(spark):
+    """The empty guard comes first whatever the schema: with the model
+    schema it reads the fit's own collect, otherwise isEmpty() runs
+    ahead of the schema error."""
     import pyspark.sql.types as T
 
     df = spark.createDataFrame([], T.StructType([]))
-    with pytest.raises(ValueError, match="Dataframe is empty"):
-        run_clv_logic(df)
+    empty = _happy_features(spark).limit(0)
+    for frame in (df, empty, empty.drop("monetary")):
+        with pytest.raises(ValueError, match="Dataframe is empty"):
+            run_clv_logic(frame)
 
 
 def test_validation_fails_on_data_loss():
@@ -263,3 +268,117 @@ def test_pareto_nbd_expected_purchases_monotone(spark):
     a = pnbd_expected_purchases_np(p1a, 13.0, x, t_x, T)
     b = pnbd_expected_purchases_np(p1b, 13.0, x, t_x, T)
     assert np.allclose(a, b, rtol=2e-2), (a, b)
+
+
+# --- single-collect fit path ----------------------------------------------
+
+
+def _per_term_bgnbd_nll(log_params, x, t_x, T, w, penalizer):
+    """The BG/NBD NLL with one lgamma call per term."""
+    from clv_data_pipeline_spark.functions.special import lgamma
+
+    r, alpha, a, b = np.exp(log_params)
+    a1 = lgamma(r + x) - lgamma(np.array(r)) + r * np.log(alpha)
+    a2 = (
+        lgamma(np.array(a + b))
+        + lgamma(b + x)
+        - lgamma(np.array(b))
+        - lgamma(a + b + x)
+    )
+    a3 = -(r + x) * np.log(alpha + T)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        a4 = np.where(
+            x > 0,
+            np.log(a) - np.log(b + np.maximum(x, 1) - 1) - (r + x) * np.log(t_x + alpha),
+            -np.inf,
+        )
+    ll = a1 + a2 + np.logaddexp(a3, a4)
+    penalty = penalizer * float(np.sum(np.exp(log_params) ** 2))
+    return -float(np.sum(w * ll)) / float(np.sum(w)) + penalty
+
+
+def _per_term_gg_nll(log_params, x, m, w, penalizer):
+    """The Gamma-Gamma NLL with one lgamma call per term."""
+    from clv_data_pipeline_spark.functions.special import lgamma
+
+    p, q, v = np.exp(log_params)
+    ll = (
+        lgamma(p * x + q)
+        - lgamma(p * x)
+        - lgamma(np.array(q))
+        + q * np.log(v)
+        + (p * x - 1) * np.log(m)
+        + (p * x) * np.log(x)
+        - (p * x + q) * np.log(v + m * x)
+    )
+    penalty = penalizer * float(np.sum(np.exp(log_params) ** 2))
+    return -float(np.sum(w * ll)) / float(np.sum(w)) + penalty
+
+
+def test_nll_single_lgamma_call_is_bit_identical():
+    """lgamma is elementwise, so one call over the concatenated
+    arguments must give exactly the per-term formulation's NLL."""
+    from clv_data_pipeline_spark.operators.clv import _bgnbd_nll, _gg_nll
+
+    rng = np.random.default_rng(11)
+    n = 257
+    x = rng.integers(0, 40, n).astype(np.float64)
+    t_x = np.where(x > 0, rng.integers(0, 60, n), 0).astype(np.float64)
+    T = t_x + rng.integers(0, 60, n)
+    w = rng.integers(1, 50, n).astype(np.float64)
+    xg = x + 1.0
+    m = np.round(rng.uniform(0.5, 400.0, n), 2)
+    for lp in rng.uniform(-4.0, 4.0, size=(200, 4)):
+        assert _bgnbd_nll(lp, x, t_x, T, w, 0.1) == _per_term_bgnbd_nll(
+            lp, x, t_x, T, w, 0.1
+        )
+    for lp in rng.uniform(-4.0, 4.0, size=(200, 3)):
+        assert _gg_nll(lp, xg, m, w, 0.1) == _per_term_gg_nll(lp, xg, m, w, 0.1)
+
+
+def test_all_non_returning_customers_refuse_the_fit(spark):
+    from pyspark.sql import functions as F
+
+    one_timers = _happy_features(spark).withColumn("frequency", F.lit(0).cast("long"))
+    with pytest.raises(ValueError, match="No customers to fit BG/NBD on"):
+        run_clv_logic(one_timers)
+
+
+def test_fit_is_independent_of_partitioning(spark, monkeypatch):
+    """The collected sufficient statistics are sorted by key before
+    Nelder-Mead, so the fitted params are identical whatever order the
+    grouped rows arrive in."""
+    from pyspark.sql import functions as F
+
+    from clv_data_pipeline_spark.operators import clv
+
+    rng = np.random.default_rng(5)
+    n = 3000
+    freq = rng.integers(0, 25, n)
+    rec = np.where(freq > 0, rng.integers(1, 200, n), 0)
+    rows = [
+        (i, int(rec[i]), int(rec[i] + rng.integers(0, 100)), int(freq[i]),
+         float(np.round(rng.uniform(1.0, 300.0), 2)))
+        for i in range(n)
+    ]
+    df = spark.createDataFrame(rows, MODEL_COLS[:5]).select(
+        "*",
+        F.lit(None).cast("timestamp").alias("first_purchase"),
+        F.lit(None).cast("timestamp").alias("last_purchase"),
+    )
+
+    fitted = []
+    orig = clv.nelder_mead
+
+    def recording(f, x0, *a, **k):
+        best, fbest = orig(f, x0, *a, **k)
+        fitted.append(best.tolist())
+        return best, fbest
+
+    monkeypatch.setattr(clv, "nelder_mead", recording)
+    run_clv_logic(df.repartition(1))
+    one = fitted[:]
+    fitted.clear()
+    run_clv_logic(df.repartition(5))
+    assert len(one) == 2
+    assert fitted == one

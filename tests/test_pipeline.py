@@ -177,3 +177,62 @@ def test_observed_firewall_metrics_parity_on_dirty_data(spark, tmp_path):
             20, int(metrics["feature_count"]), int(metrics["invalid_count"]),
             list(FIREWALL_REQUIRED_COLUMNS),
         )
+
+
+def test_pipeline_result_counts_match_tables(spark, tmp_path):
+    """Every PipelineResult count comes from an aggregate or an observed
+    write, never from re-reading; each must equal an independent count
+    of its table as the day left it."""
+    base = str(tmp_path)
+    for i, day in enumerate(["2026-01-01", "2026-01-02", "2026-01-03"]):
+        res = run_pipeline(spark, base, run_date=day, seed=1,
+                           max_existing_id=400 if i == 0 else None)
+        staging = spark.read.parquet(str(tmp_path / "transactions_staging"))
+        assert res.staging_rows == staging.count()
+        assert res.feature_rows == spark.read.parquet(res.features_path).count()
+        assert res.prediction_rows == spark.read.parquet(res.predictions_path).count()
+        assert res.prediction_rows > 0
+
+
+def test_pipeline_warm_day_runs_at_most_13_jobs(spark, tmp_path):
+    """A warm day (tables already exist) starts <= 13 Spark jobs.  The
+    count is the job-id delta across the day: the DAG scheduler hands
+    out job ids from one counter, read before and after the run."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    base = str(tmp_path)
+    run_pipeline(spark, base, run_date="2026-01-01", seed=1)
+    run_pipeline(spark, base, run_date="2026-01-02", seed=1,
+                 max_existing_id=None)
+    before = dag.nextJobId()
+    run_pipeline(spark, base, run_date="2026-01-03", seed=1,
+                 max_existing_id=None)
+    assert dag.nextJobId() - before <= 13
+
+
+def test_pipeline_leaves_session_conf_unchanged(spark, tmp_path):
+    """Dynamic partition overwrite is a per-write option; the session's
+    partitionOverwriteMode must read the same after a run (set to the
+    default explicitly, so an earlier test cannot mask a change)."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "STATIC")
+    try:
+        run_pipeline(spark, str(tmp_path), run_date="2026-01-01", seed=1)
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.unset(key)
+
+
+def test_pipeline_corrupt_registry_raises(spark, tmp_path):
+    """Only a missing registry means "no IDs yet"; a registry that exists
+    but cannot be read must fail the run, not re-allocate IDs from 1."""
+    run_pipeline(spark, str(tmp_path), run_date="2026-01-01", seed=1,
+                 max_existing_id=None)
+    registry = tmp_path / "master_users"
+    parts = list(registry.rglob("*.parquet"))
+    assert parts
+    for part in parts:
+        part.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        run_pipeline(spark, str(tmp_path), run_date="2026-01-02", seed=2,
+                     max_existing_id=None)
+    assert not (registry / "load_date=2026-01-02").exists()
